@@ -70,25 +70,14 @@ from incremental_dagster_delta_spark.tableio import (
     DeletionVectors,
     PartitionedTable,
     _hidden_rel,
+    _local_path,
+    _put_if_absent,
 )
 
 PROTOCOL_ACTION = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
 
 # UUIDv5 namespace for deterministic table ids (fixed, arbitrary).
 _TABLE_ID_NS = uuid.UUID("8c6d6f1e-3b3a-4a5e-9b8e-2f6f5d4c3b2a")
-
-
-def _local_path(path: str) -> str:
-    """Local filesystem path for plain-python IO: strip ``file:`` /
-    ``file://`` / ``file:///`` URI prefixes (all forms Hadoop emits for
-    local tables). Non-``file:`` schemes pass through untouched — the
-    exporter's constructor rejects them before any IO happens."""
-    if path.startswith("file:"):
-        rest = path[len("file:") :]
-        while rest.startswith("//"):
-            rest = rest[1:]
-        return rest
-    return path
 
 
 def _log_dir(table: PartitionedTable) -> str:
@@ -853,17 +842,15 @@ class DeltaLogExporter:
             lines.append({"remove": action})
         for rel in added:
             lines.append(self._add_action(rel, live[rel]))
-        os.makedirs(self.log_dir, exist_ok=True)
         final = os.path.join(self.log_dir, f"{v:020d}.json")
-        tmp = final + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            for obj in lines:
-                fh.write(json.dumps(obj, separators=(",", ":")) + "\n")
-        # version visibility flips on the rename, like a Delta commit;
-        # a racing writer of the SAME version would be the caller's
-        # concurrency bug (Delta proper closes this with CAS — out of
-        # scope for an export seam).
-        os.replace(tmp, final)
+        body = "".join(json.dumps(obj, separators=(",", ":")) + "\n" for obj in lines)
+        # version visibility flips on the put-if-absent, like a Delta
+        # commit: of two exporters that computed the same version, the
+        # later one fails here instead of replacing a committed version
+        if not _put_if_absent(final, body.encode("utf-8")):
+            raise FileExistsError(
+                f"{final} was committed by a concurrent export; re-run export()"
+            )
         if self.checkpoint_interval and v > 0 and v % self.checkpoint_interval == 0:
             self.write_checkpoint()
         return v

@@ -45,24 +45,35 @@ from incremental_dagster_delta_spark.queries import mmr  # noqa: E402,F401
 
 # --------------------------------------------------------------------------
 # Driver-visibility rotation. The driver's correctness sweep covers the
-# FIRST 50 registry entries each round, so ordering is a coverage budget:
-# every oracle-backed qid should earn a driver-verified row at least once
-# across rounds, and no row should age past ~6 rounds. After the r14
-# sweep the stalest rows were the 14 r8-aged re-confirms (VERDICT r14
-# #1), which lead the r15 front after the round's new operator; the 35
-# alphabetically-first of the 50 r10-aged rows fill to exactly 50
-# (27 after the session's six later additions took front slots).
-# The 23 r10 rows left for the r16 front: q_mmr_rerank, q_pq_train,
-# q_posexplode,
-# q_partition_discovery, q_partition_prune, q_pii_redact, q_quantiles,
-# q_range_join, q_regex_parse, q_repeated_ngrams,
+# FIRST 50 registry entries, so ordering is a coverage budget: every qid
+# whose code path a change touches leads the list, then the stalest rows.
+# (a) Every qid that runs PartitionedTable.append_batch (directly, through
+#     DeletionVectors.mark_deleted, or through IngestPipeline) — the
+#     commit protocol under it was rewritten. Find them with
+#     grep -n "append_batch\|mark_deleted\|IngestPipeline(" queries/*.py
+# (b) The previous front, in its order, filling to exactly 50.
+# Left for the next rotation, stalest first: q_mmr_rerank, q_pq_train,
+# q_posexplode, q_partition_discovery, q_partition_prune, q_pii_redact,
+# q_quantiles, q_range_join, q_regex_parse, q_repeated_ngrams,
 # q_reservoir_per_source, q_rolling_range_window, q_scd2_merge,
 # q_semdedup, q_seq_len_buckets, q_session_window, q_sliding_window,
 # q_stratified_sample, q_string_funcs, q_tumbling_window, q_unpivot,
-# q_upsert_merge, q_variant_json.
+# q_upsert_merge, q_variant_json; then the eight pushed out of (b):
+# q_histogram, q_incr_agg_maintain, q_incremental_dedup, q_json_extract,
+# q_kmeans_centroids, q_kmeans_maximin, q_mixture_plan, q_pivot_api.
 # --------------------------------------------------------------------------
 _R15_FRONT = [
-    # (a) new this round — first driver rows
+    # (a) qids on the append_batch commit path
+    "q_exactly_once_publish",
+    "q_time_travel",
+    "q_backfill",
+    "q_multi_hop",
+    "q_refresh_overwrite",
+    "q_listing_accumulate",
+    "q_change_data_feed",
+    "q_deletion_vectors",
+    "q_ivm_retractions",
+    # (b) the previous front
     "q_ivf_incremental",
     "q_rouge_n",
     "q_k_anonymity",
@@ -72,7 +83,6 @@ _R15_FRONT = [
     "q_cohen_kappa",
     "q_ccnet_buckets",
     "q_dp_noisy_counts",
-    # (b) the 14 r8-aged re-confirms (every row then ≤7 rounds old)
     "q_sql_udf",
     "q_substring_dedup",
     "q_surprisal_buckets",
@@ -87,7 +97,6 @@ _R15_FRONT = [
     "q_unigram_surprisal",
     "q_wholetext_ingest",
     "q_window_battery",
-    # (c) the 27 alphabetically-first r10-aged rows, filling to exactly 50
     "q_array_funcs",
     "q_asof_join",
     "q_audio_features",
@@ -106,15 +115,6 @@ _R15_FRONT = [
     "q_funnel_conversion",
     "q_gap_fill",
     "q_gopher_rules",
-    "q_histogram",
-    "q_incr_agg_maintain",
-    "q_incremental_dedup",
-    "q_json_extract",
-    "q_kmeans_centroids",
-    "q_kmeans_maximin",
-    "q_listing_accumulate",
-    "q_mixture_plan",
-    "q_pivot_api",
 ]
 
 

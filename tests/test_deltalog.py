@@ -8,9 +8,11 @@ from __future__ import annotations
 
 import json
 import os
+import posixpath
 
+import pytest
 
-
+from incremental_dagster_delta_spark import deltalog
 from incremental_dagster_delta_spark.deltalog import (
     DeltaLogExporter,
     read_delta_log,
@@ -104,6 +106,26 @@ def test_append_then_export_appends_one_add_version(spark, tmp_path):
     assert not any("remove" in ln for ln in lines)
 
 
+def test_export_refuses_to_replace_a_committed_version(spark, tmp_path, monkeypatch):
+    """Two exporters that computed the same version: the later one must
+    fail loudly, and the committed version stays byte-identical."""
+    t = _mk(spark, tmp_path / "t")
+    ex = DeltaLogExporter(t)
+    ex.export()
+    t.append_batch(spark.createDataFrame([(4, "d", "2024-01-03")], SCHEMA), 1)
+    assert ex.export() == 1
+    committed = os.path.join(ex.log_dir, f"{1:020d}.json")
+    before = open(committed, "rb").read()
+    t.append_batch(spark.createDataFrame([(5, "e", "2024-01-04")], SCHEMA), 2)
+    real = deltalog._existing_versions
+    # an exporter that has not seen version 1 yet computes v=1 again
+    monkeypatch.setattr(deltalog, "_existing_versions", lambda d: real(d)[:-1])
+    with pytest.raises(FileExistsError):
+        ex.export()
+    assert open(committed, "rb").read() == before
+    assert sorted(os.listdir(ex.log_dir)) == [f"{0:020d}.json", f"{1:020d}.json"]
+
+
 def test_partition_delete_then_export_emits_removes(spark, tmp_path):
     t = _mk(spark, tmp_path / "t")
     ex = DeltaLogExporter(t)
@@ -180,7 +202,7 @@ def test_uncommitted_partial_publish_never_exported(spark, tmp_path):
     open(orphan, "wb").write(open(src, "rb").read())
     assert DeltaLogExporter(t).export() == 0
     replay = replay_file_set(str(tmp_path / "t" / "_delta_log"))
-    assert not any("b9-" in p for p in replay)
+    assert not any(posixpath.basename(p).startswith("b9-") for p in replay)
     total = sum(json.loads(a["stats"])["numRecords"] for a in replay.values())
     assert total == 3  # committed rows only
 
